@@ -30,27 +30,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgforge import canon, extract, link, triples
 from kgforge.tables import load
 
 MIN_TOKEN_LEN = 4
 PREFIX_LEN = 4
 
-# Memoization: every registered pipeline op re-derives the same corpus cuts,
-# and each derive_transcripts used to run a docs.count() Spark job — one
-# extra job per op per invocation (round-1 VERDICT #7). The sf dirs are
-# immutable inputs, so n_docs memoizes per sf_dir for the process lifetime;
-# derived DataFrames memoize per (Spark application, sf_dir) and are
-# persist()ed so a 19-query bench builds transcripts/dictionary once.
+# The session cache: every registered op re-derives the same cuts (corpus
+# tables, the extract → link chain, the graph and similarity cuts the
+# analytics keys self-join), and each registered query is self-contained —
+# without a shared store one driver/bench session re-runs a cut's whole
+# dataflow once per key. Each build is persist()ed and kept per
+# (Spark application, sf_dir, kind); the sf dirs are immutable inputs.
+# Bounded: entries of a stopped application are dropped (their context is
+# gone, so there is nothing to unpersist), and only one sf_dir's cuts stay
+# resident — a call for another sf_dir unpersists the previous one's.
+# n_docs (an int) memoizes per sf_dir for the process lifetime; it used to
+# be a docs.count() job per op per invocation (round-1 VERDICT #7).
 _N_DOCS: dict[str, int] = {}
-_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
-def _memo(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    df = _MEMO.get(key)
+def cached(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFrame:
+    """The persisted ``build()`` cut for (this application, sf_dir, kind),
+    built on first use; a repeat call returns the same DataFrame."""
+    app = spark.sparkContext.applicationId
+    for key in list(_CACHE):
+        if key[0] != app:
+            del _CACHE[key]
+        elif key[1] != sf_dir:
+            _CACHE.pop(key).unpersist()
+    df = _CACHE.get((app, sf_dir, kind))
     if df is None:
-        df = build().persist()
-        _MEMO[key] = df
+        df = _CACHE[(app, sf_dir, kind)] = build().persist()
     return df
 
 
@@ -136,7 +148,7 @@ def est_links_per_doc(sf_dir: str, sample_rows: int = 256) -> float:
 
 
 def derive_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _memo(spark, sf_dir, "transcripts", lambda: _derive_transcripts(spark, sf_dir))
+    return cached(spark, sf_dir, "transcripts", lambda: _derive_transcripts(spark, sf_dir))
 
 
 def _derive_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -188,7 +200,7 @@ TRANSCRIPTS_SQL = f"""
 
 def derive_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct corpus tokens (len ≥ MIN_TOKEN_LEN) as a 1:1 entity lexicon."""
-    return _memo(spark, sf_dir, "dictionary", lambda: _derive_dictionary(spark, sf_dir))
+    return cached(spark, sf_dir, "dictionary", lambda: _derive_dictionary(spark, sf_dir))
 
 
 def _derive_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -233,7 +245,7 @@ DICTIONARY_SQL = f"""
 
 def derive_xref_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star same-as edges: each entity ↔ min entity of its 4-char-prefix group."""
-    return _memo(spark, sf_dir, "xref_edges", lambda: _derive_xref_edges(spark, sf_dir))
+    return cached(spark, sf_dir, "xref_edges", lambda: _derive_xref_edges(spark, sf_dir))
 
 
 def _derive_xref_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,14 +275,43 @@ def derive_canonical_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph/pipeline op needs this same map, and canonical_map_auto costs a
     driver union-find pass per call — once per (application, sf_dir) is
     enough."""
-    from kgforge import canon
-
-    return _memo(
+    return cached(
         spark,
         sf_dir,
         "canonical_map",
         lambda: canon.canonical_map_auto(
             derive_dictionary(spark, sf_dir).select("entity_id"),
             derive_xref_edges(spark, sf_dir),
+        ),
+    )
+
+
+def derive_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The linked-mention cut ``link_mentions(extract_mentions(...))`` over
+    the derived corpus — the one place the matcher runs for every op that
+    reads mentions-with-entities. Persisted at the same boundary where the
+    real pipeline materializes ``linked`` to the warehouse: Catalyst has no
+    cross-branch CSE, so the three triple branches and two remap join sides
+    downstream would otherwise re-run the matcher UDF six times."""
+
+    def build() -> DataFrame:
+        d = derive_dictionary(spark, sf_dir)
+        m = extract.extract_mentions(derive_transcripts(spark, sf_dir), d)
+        return link.link_mentions(m, d)
+
+    return cached(spark, sf_dir, "linked", build)
+
+
+def derive_remapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-occurrence canonical triples (raw triples remapped, NOT deduped):
+    the fusion / as-of family needs occurrence counts, which the final
+    triple set drops at its first-emission dedup."""
+    return cached(
+        spark,
+        sf_dir,
+        "remapped",
+        lambda: canon.remap_triples(
+            triples.build_raw_triples(derive_linked(spark, sf_dir)),
+            derive_canonical_map(spark, sf_dir),
         ),
     )

@@ -104,25 +104,6 @@ def record_stage_from_files(
     wh.merge_local(CHECKPOINT_TABLE, pdf, keys=["run_id", "stage", "lineage_part"])
 
 
-def stage_metrics(df: DataFrame, stage: str, run_id: str) -> DataFrame:
-    """Per-lineage-part counters for a stage output (requires lineage_part col)."""
-    return df.groupBy("lineage_part").agg(F.count(F.lit(1)).alias("rows_out")).select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(stage).alias("stage"),
-        "lineage_part",
-        "rows_out",
-        F.lit("done").alias("status"),
-        F.lit(int(time.time() * 1000)).alias("wall_ms"),
-    )
-
-
-def record_stage(
-    wh: Warehouse, spark: SparkSession, df_with_lineage: DataFrame, stage: str, run_id: str
-) -> None:
-    m = stage_metrics(df_with_lineage, stage, run_id)
-    wh.merge(spark, CHECKPOINT_TABLE, m, keys=["run_id", "stage", "lineage_part"])
-
-
 def done_parts(wh: Warehouse, spark: SparkSession, stage: str, run_id: str) -> DataFrame | None:
     """lineage_parts already completed for (run_id, stage), or None."""
     if not wh.exists(CHECKPOINT_TABLE):

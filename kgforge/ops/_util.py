@@ -64,17 +64,3 @@ def dmul_sum_sql(a: str, b: str) -> str:
         f"ROUND(CAST(SUM(CAST({a} AS DECIMAL(18,4)) * CAST({b} AS DECIMAL(18,4)))"
         f" AS DOUBLE), 2)"
     )
-
-
-def session_memo(memo, spark, sf_dir, build):
-    """Per-(applicationId, sf_dir) DataFrame memo for registered ops whose
-    body ``persist()``s an intermediate cut (ADVICE r04): a long-lived
-    session that invokes such an op repeatedly must reuse the first call's
-    persisted cut instead of stacking one new cached copy per call. Keyed
-    exactly like ``corpus._MEMO`` / ``kgfuse._REMAPPED_MEMO`` so a new
-    SparkSession (new applicationId) naturally re-derives."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = memo.get(key)
-    if got is None:
-        got = memo[key] = build()
-    return got

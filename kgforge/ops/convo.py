@@ -27,12 +27,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kgforge import corpus
-from kgforge.ops import _util, kgfuse
+from kgforge.ops import kgfuse
 from kgforge.ops.pipeline_ops import _PRELUDE
 from kgforge.registry import register
 from kgforge.tables import load
-
-_SPAN_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 # ------------------------------------------------------------- SFT pairs
 
@@ -210,7 +208,7 @@ _MIDX_PAD = 6
     ),
 )
 def kg_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rem = kgfuse.remapped_triples(spark, sf_dir)
+    rem = corpus.derive_remapped(spark, sf_dir)
     n_conv = max(20, corpus.n_docs(spark, sf_dir) // 8)
     cutoff = corpus.n_docs(spark, sf_dir) * ASOF_NUM // ASOF_DEN
     return asof_triples(rem, n_conv, cutoff)
@@ -306,10 +304,10 @@ _SPAN_PAD = 6  # span_no pad: spans-per-doc = tokens/8, bounded well under 1e6
     ),
 )
 def dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # span_dedup persists its span cut; memoize per (app, sf_dir) so
-    # repeated invocations reuse it instead of stacking caches (ADVICE r04)
-    return _util.session_memo(
-        _SPAN_MEMO, spark, sf_dir,
+    # span_dedup persists its span cut; cached per session so repeated
+    # invocations reuse it instead of stacking caches (ADVICE r04)
+    return corpus.cached(
+        spark, sf_dir, "dedup_spans",
         lambda: span_dedup(load(spark, sf_dir, "documents")),
     )
 

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kgforge import canon, corpus, extract, link, triples
+from kgforge import canon, corpus
 from kgforge.ops import pipeline_ops
 from kgforge.registry import register
 
@@ -40,11 +40,7 @@ from kgforge.registry import register
     ),
 )
 def graph_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tr = corpus.derive_transcripts(spark, sf_dir)
-    d = corpus.derive_dictionary(spark, sf_dir)
-    m = extract.extract_mentions(tr, d)
-    linked = link.link_mentions(m, d)
-    resolved = linked.selectExpr(
+    resolved = corpus.derive_linked(spark, sf_dir).selectExpr(
         "entity_id AS subj",
         "'resolved_as' AS pred",
         "curie AS obj",
@@ -90,9 +86,7 @@ def graph_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    tr = corpus.derive_transcripts(spark, sf_dir)
-    d = corpus.derive_dictionary(spark, sf_dir)
-    linked = link.link_mentions(extract.extract_mentions(tr, d), d)
+    linked = corpus.derive_linked(spark, sf_dir)
     cmap = corpus.derive_canonical_map(spark, sf_dir)
     resolved = (
         linked.join(
@@ -249,20 +243,13 @@ _GRAPH_SQL_PREFIX = (
 )
 
 
-_UND_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def undirected_entity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct undirected (a < b) entity co-occurrence edges, persisted:
-    every analytics op below self-joins this cut, and Catalyst has no
-    cross-branch CSE — without the persist the whole extract→link→triples
-    dataflow would re-run once per join branch. Memoized per
-    (applicationId, sf_dir): seven registered graph keys share this cut,
-    so per-call persists would stack seven cached copies of the same
-    edge set in one session (the ADVICE r04 leak class)."""
+    """Distinct undirected (a < b) entity co-occurrence edges, cached per
+    session: every analytics op below self-joins this cut, and Catalyst has
+    no cross-branch CSE — without the persisted cut the whole
+    extract→link→triples dataflow would re-run once per join branch, and
+    seven registered graph keys share it."""
     from pyspark.sql import functions as F
-
-    from kgforge.ops import _util
 
     def build() -> DataFrame:
         tri = pipeline_ops.pipe_triples(spark, sf_dir)
@@ -275,10 +262,9 @@ def undirected_entity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.greatest("subj", "obj").alias("b"),
             )
             .distinct()
-            .persist()
         )
 
-    return _util.session_memo(_UND_MEMO, spark, sf_dir, build)
+    return corpus.cached(spark, sf_dir, "undirected_entity_edges", build)
 
 
 def triangle_counts(und: DataFrame) -> DataFrame:
@@ -441,16 +427,10 @@ _BASKET_CTE = """
 """
 
 
-_COORDER_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def coorder_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected (a < b) co-ordered part pairs from lineitem,
-    persisted (the jaccard stages branch over it several times) and
-    memoized per (applicationId, sf_dir): three registered keys (jaccard,
-    kcore, khop) share this cut, so per-call persists would stack cached
-    copies and re-run the lineitem self-join per key (ADVICE r04 class)."""
-    from kgforge.ops import _util
+    cached per session: the jaccard stages branch over it several times,
+    and three registered keys (jaccard, kcore, khop) share it."""
     from kgforge.tables import load
     from pyspark.sql import functions as F
 
@@ -480,10 +460,9 @@ def coorder_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             grp.select(F.explode(pairs).alias("e"))
             .select("e.a", "e.b")
             .distinct()
-            .persist()
         )
 
-    return _util.session_memo(_COORDER_MEMO, spark, sf_dir, build)
+    return corpus.cached(spark, sf_dir, "coorder_part_edges", build)
 
 
 @register(

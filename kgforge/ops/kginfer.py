@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kgforge import corpus
-from kgforge.ops import _util, convo, graph, kgfuse, pipeline_ops
+from kgforge.ops import convo, graph, kgfuse, pipeline_ops
 from kgforge.registry import register
 from kgforge.tables import load
 
@@ -98,17 +98,22 @@ KHOP_HOPS = 3
     ),
 )
 def graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    und = graph.coorder_part_edges(spark, sf_dir)
-    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    seeds = (
-        adj.select(F.col("u").alias("node"))
-        .distinct()
-        .orderBy("node")
-        .limit(KHOP_SEEDS)
-    )
-    return khop_neighborhoods(adj, seeds)
+    # khop_neighborhoods persists its partitioned adjacency; cached per
+    # session so repeated calls reuse it instead of stacking caches
+    def build() -> DataFrame:
+        und = graph.coorder_part_edges(spark, sf_dir)
+        adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
+            und.select(F.col("b").alias("u"), F.col("a").alias("v"))
+        )
+        seeds = (
+            adj.select(F.col("u").alias("node"))
+            .distinct()
+            .orderBy("node")
+            .limit(KHOP_SEEDS)
+        )
+        return khop_neighborhoods(adj, seeds)
+
+    return corpus.cached(spark, sf_dir, "graph_khop", build)
 
 
 def khop_neighborhoods(
@@ -336,7 +341,7 @@ _ASOF_CTE = """
     ),
 )
 def kg_temporal_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    rem = kgfuse.remapped_triples(spark, sf_dir)
+    rem = corpus.derive_remapped(spark, sf_dir)
     n_conv = max(20, corpus.n_docs(spark, sf_dir) // 8)
     nd = corpus.n_docs(spark, sf_dir)
     t1 = convo.asof_triples(rem, n_conv, nd * DIFF_NUM1 // DIFF_DEN1)
@@ -508,8 +513,14 @@ _PAIRS_CTE = """
     ),
 )
 def pair_preference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = convo.sft_pairs(corpus.derive_transcripts(spark, sf_dir))
-    return preference_pairs(pairs)
+    # preference_pairs persists its pair cut; cached per session so
+    # repeated calls reuse it instead of stacking caches
+    return corpus.cached(
+        spark, sf_dir, "pair_preference",
+        lambda: preference_pairs(
+            convo.sft_pairs(corpus.derive_transcripts(spark, sf_dir))
+        ),
+    )
 
 
 def preference_pairs(pairs: DataFrame) -> DataFrame:

@@ -141,10 +141,7 @@ def udf_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Broadcast-head + sort-merge-tail entity linking with rank-1 disambiguation.",
 )
 def udf_link(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tr = corpus.derive_transcripts(spark, sf_dir)
-    d = corpus.derive_dictionary(spark, sf_dir)
-    m = extract.extract_mentions(tr, d)
-    return link.link_mentions(m, d).select(
+    return corpus.derive_linked(spark, sf_dir).select(
         "conv_id", "turn_idx", "m_idx", "entity_id", "curie", "prior"
     )
 
@@ -165,17 +162,6 @@ def graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return canon.canonical_map(d.select("entity_id"), edges)
 
 
-# Final triple set memo, keyed like corpus._MEMO: every graph-analytics
-# key (cc, pagerank, degrees, triangles, jaccard, bfs, remap, nodes, cdc)
-# starts from pipe_triples, and each registered query is self-contained —
-# without the memo a single driver/bench session re-runs the whole
-# extract → link → dedup dataflow once per key. The triple set is
-# deterministic per sf_dir and entity-bounded (~1k rows), so caching the
-# persisted cut is exactly the corpus-derivation precedent. Stale entries
-# from stopped sessions never hit (fresh applicationId).
-_TRIPLES_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 @register(
     "pipe_triples",
     sql=_PRELUDE + ",\n" + _MENTIONS_CTE + ",\n" + _LINKED_CTE + ",\n" + _TRIPLES_CTE
@@ -187,33 +173,20 @@ _TRIPLES_MEMO: dict[tuple[str, str], DataFrame] = {}
     ),
 )
 def pipe_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _TRIPLES_MEMO.get(key)
-    if got is not None:
-        return got
-    tr = corpus.derive_transcripts(spark, sf_dir)
-    d = corpus.derive_dictionary(spark, sf_dir)
-    edges = corpus.derive_xref_edges(spark, sf_dir)
-    m = extract.extract_mentions(tr, d)
-    # Catalyst has no cross-branch common-subplan elimination: the three
-    # triple branches + two remap join sides would re-run the extraction UDF
-    # and linking join SIX times (seen in .explain: 6× MapInPandas). Persist
-    # at the linked boundary — the same cut where the real pipeline
-    # materializes to the warehouse for resumability.
-    linked = link.link_mentions(m, d).persist()
-    raw = triples.build_raw_triples(linked)
-    cmap = corpus.derive_canonical_map(spark, sf_dir)
-    remapped = canon.remap_triples(raw, cmap)
-    # linked rows = docs × measured link density (a bounded pyarrow head
-    # sample — zero Spark jobs, like the footer row count); the constant-44
-    # round-3 estimate engaged the wrong strategy on corpora with different
-    # link density (VERDICT r03 #5)
-    est_linked = corpus.n_docs(spark, sf_dir) * corpus.est_links_per_doc(sf_dir)
-    out = triples.dedup_triples(
-        remapped, two_level=est_linked >= triples.TWO_LEVEL_MIN_ROWS
-    ).persist()
-    _TRIPLES_MEMO[key] = out
-    return out
+    # Every graph-analytics key starts from this cut, so it is cached like
+    # the corpus derivations. linked rows = docs × measured link density (a
+    # bounded pyarrow head sample — zero Spark jobs, like the footer row
+    # count); the constant-44 round-3 estimate engaged the wrong strategy
+    # on corpora with different link density (VERDICT r03 #5)
+    def build() -> DataFrame:
+        est_linked = corpus.n_docs(spark, sf_dir) * corpus.est_links_per_doc(sf_dir)
+        return triples.final_triples(
+            corpus.derive_linked(spark, sf_dir),
+            corpus.derive_canonical_map(spark, sf_dir),
+            two_level=est_linked >= triples.TWO_LEVEL_MIN_ROWS,
+        )
+
+    return corpus.cached(spark, sf_dir, "triples", build)
 
 
 @register(
@@ -300,9 +273,7 @@ def udf_score_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    tr = corpus.derive_transcripts(spark, sf_dir)
-    d = corpus.derive_dictionary(spark, sf_dir)
-    linked = link.link_mentions(extract.extract_mentions(tr, d), d).select(
+    linked = corpus.derive_linked(spark, sf_dir).select(
         "conv_id", "turn_idx", "m_idx", "entity_id", "surface", "prior"
     )
 
@@ -501,10 +472,8 @@ def pipe_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     for parity in (0, 1):
         batch = tr.where(conv_ord % 2 == parity)
         linked = link.link_mentions(extract.extract_mentions(batch, d), d).persist()
-        tri = triples.dedup_triples(
-            canon.remap_triples(triples.build_raw_triples(linked), cmap),
-            two_level=False,  # per-batch input is far below TWO_LEVEL_MIN_ROWS
-        )
+        # per-batch input is far below TWO_LEVEL_MIN_ROWS
+        tri = triples.final_triples(linked, cmap, two_level=False)
         tri = metrics.with_lineage_part_of(tri, ["subj", "pred", "obj"])
         wh.merge(
             spark, "triples", tri, keys=["subj", "pred", "obj"],

@@ -95,12 +95,11 @@ def run_pipeline(
     mark("canonicalize")
 
     # ---- stage 3: triples + canonical remap + dedup + MERGE --------------
-    raw = triples.build_raw_triples(linked_all)
-    remapped = canon.remap_triples(raw, cmap)
     # two-level dedup only above the threshold — decided from the manifest
     # row count (zero Spark jobs; cfg.observed["linked_rows"] is already it)
-    final = triples.dedup_triples(
-        remapped,
+    final = triples.final_triples(
+        linked_all,
+        cmap,
         two_level=cfg.observed["linked_rows"] >= triples.TWO_LEVEL_MIN_ROWS,
     )
     # lineage_part for the TRIPLES table derives from the merge keys, not

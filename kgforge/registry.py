@@ -39,32 +39,27 @@ def register(key: str, sql: str | None, doc: str = "") -> Callable[[QueryFn], Qu
 # Curated presentation order for the driver contract. The driver's
 # correctness harness checks registry keys in iteration order and caps the
 # CORRECTNESS file at 50 rows, so the ordering below is rotated each round.
-# Round-5 rotation: front-load (a) the five keys NEW this round (no driver
-# row exists); (b) every key whose fingerprint changed since the r04
-# certification — the ADVICE-r04 memoization/doc fixes plus the shared
-# undirected_entity_edges memo, whose closure covers seven graph keys;
-# (c) the 22 keys whose newest driver row is still r02 (code unchanged
-# since — fingerprint-pinned, re-verified by the local mirror each round)
-# so the oldest certifications get refreshed; and (d) r03-green refresh
-# fillers (heaviest/most-shared closures first) occupying the remaining
-# slots — any key a later round-5 edit re-fingerprints displaces a filler.
-# Keys past the window all hold green r03/r04 rows on code unchanged this
-# round; certified.json + tests/test_registry.py make "past-window implies
-# certified-unchanged" machine-checked, and the window-coverage lint is
-# now GENERIC: any key absent from certified.json or whose fingerprint
-# drifted from it must sit inside the first 50.
+# Keys past the window hold green driver rows on code unchanged since
+# (certified.json pins their fingerprints), and the window-coverage lint is
+# GENERIC: any key absent from certified.json or whose fingerprint drifted
+# from it must sit inside the first 50 (tests/test_registry.py).
+# Current rotation: the one session cache (corpus.cached) and the one
+# extract → link → triples chain (corpus.derive_linked / derive_remapped,
+# triples.final_triples) re-fingerprint 26 keys — every key that reaches a
+# cached cut. Together with the 18 keys that had already drifted
+# that is 44 keys; 20 of the 26 rotated in, displacing the r02-certified
+# refresh fillers (all green in the r05 driver window), and six fillers
+# remain — any key a later edit re-fingerprints displaces one of them.
 _ORDER: list[str] = [
-    # -- (a) NEW in round 5: KG inference + training-data refinement pane
+    # -- (a) new in round 5 (no certified row yet)
     "graph_khop",
     "kg_typing",
     "kg_temporal_diff",
     "sample_stratified",
     "pair_preference",
-    # -- (b) fingerprint changed since the r04 certification: the ADVICE
-    # fixes (kg_negsample doc, dedup_spans/kg_predstats/kg_relprops
-    # session memos), the undirected_entity_edges memo closure, and the
-    # late-round PPJoin size/positional filters in the prefix-candidate
-    # helper (displaced the fn_string refresh filler one-for-one)
+    # -- (b) drifted before the session-cache change: the ADVICE-r04
+    # memos, the undirected_entity_edges / coorder_part_edges closures,
+    # and the PPJoin filters in the prefix-candidate helper
     "dedup_ngram_jaccard",
     "kg_negsample",
     "dedup_spans",
@@ -76,18 +71,54 @@ _ORDER: list[str] = [
     "graph_triangles",
     "graph_bfs",
     "graph_triangles_cdc",
-    # -- (c) newest driver row is r02 (code unchanged since round 2;
-    # displaced from the r04 window by that round's new keys) — refresh
+    "graph_jaccard",
+    "graph_kcore",
+    # -- (c) re-fingerprinted by the session cache and the one chain:
+    # already in the window ...
+    "udf_score_arrow",
+    "graph_remap",
+    "scan_snapshot",
+    "scan_cdc",
+    "pipe_incremental",
+    "dedup_clusters",
+    # ... and rotated in
+    "sink_compact",
+    "dedup_minhash",
+    "pipe_triples",
+    "pipe_transcripts",
+    "udf_extract_conv",
+    "graph_degree",
+    "win_funnel",
+    "kg_validate",
+    "kg_path2hop",
+    "kg_fusion",
+    "pair_sft",
+    "conv_toolchain",
+    "kg_asof",
+    "kg_mergestats",
+    "sink_merge",
+    "graph_pagerank",
+    "graph_cc",
+    "graph_nodes",
+    "udf_mentions",
+    "udf_link",
+    # -- (d) refresh fillers (green r03 rows, r05 rows on unchanged code)
+    "fn_hash",
+    "sim_ivf_cosine",
+    "sim_lsh_multiprobe",
+    "text_lm_score",
+    "dedup_embed_cosine",
+    "win_sessionize",
+    # ---- 50-key window boundary (driver cap observed in rounds 1-5) ----
+    # displaced r02-certified fillers: green r05 rows on unchanged code
     "dedup_exact",
     "text_tokens",
     "text_fingerprint",
     "text_trigram_quality",
     "sort_global",
     "set_union",
-    "udf_score_arrow",
     "win_rank",
     "udtf_tokens",
-    "graph_remap",
     "dedup_simhash",
     "agg_quantile",
     "join_asof",
@@ -100,26 +131,8 @@ _ORDER: list[str] = [
     "set_intersect",
     "set_except",
     "agg_cube",
-    # -- (d) r03-green refresh fillers: heaviest / most-shared closures
-    # first (similarity + pipeline + scan families), swapped out one-for-
-    # one if a later round-5 edit re-fingerprints some other key
-    "fn_hash",
-    "scan_snapshot",
-    "scan_cdc",
-    "pipe_incremental",
-    "dedup_clusters",
-    "sim_ivf_cosine",
-    "sim_lsh_multiprobe",
-    "text_lm_score",
-    "dedup_embed_cosine",
-    "win_sessionize",
-    "graph_jaccard",
-    "graph_kcore",
-    # ---- 50-key window boundary (driver cap observed in rounds 1-4) ----
-    # every key below holds a green CORRECTNESS_r03 or _r04 row on code
-    # unchanged this round (certified.json pins the fingerprints)
+    # green CORRECTNESS_r03 / _r04 rows on code unchanged since
     "fn_string",
-    "sink_compact",
     "text_split",
     "text_pack",
     "text_repetition",
@@ -127,8 +140,6 @@ _ORDER: list[str] = [
     "agg_grouping_sets",
     "agg_approx_quantile",
     "sim_topk_cosine",
-    "dedup_minhash",
-    "pipe_triples",
     "join_broadcast",
     "dedup",
     "filter_pred",
@@ -136,28 +147,15 @@ _ORDER: list[str] = [
     "text_quality",
     "stream_session_batch",
     "mm_features",
-    "pipe_transcripts",
-    "udf_extract_conv",
-    "graph_degree",
     "text_langid",
     "text_normalize",
     "sample_mixture",
     "filter_gate",
-    "win_funnel",
-    "kg_validate",
-    "kg_path2hop",
     "graph_comp_sizes",
     "text_tfidf",
     "sim_bm25",
     "text_anonymize",
-    "kg_fusion",
     "text_chunk",
-    "pair_sft",
-    "conv_toolchain",
-    "kg_asof",
-    "kg_mergestats",
-    "sink_merge",
-    "graph_pagerank",
     "scan_project",
     "agg_approx",
     "explode_tokens",
@@ -185,10 +183,6 @@ _ORDER: list[str] = [
     "join_bucketed",
     "agg_pudf",
     "topk_group",
-    "graph_cc",
-    "graph_nodes",
-    "udf_mentions",
-    "udf_link",
 ]
 
 # Keys registered after the round's window rotation: exempt from the

@@ -83,11 +83,11 @@ def finalize(
     linked table — identical code path to the batch pipeline's stage 3."""
     wh = Warehouse(warehouse_root)
     linked_all = wh.read(spark, "linked").persist()
-    raw = triples.build_raw_triples(linked_all)
     cmap = canon.canonical_map_auto(dictionary.select("entity_id").distinct(), xref_edges)
     final = metrics.with_lineage_part_of(
-        triples.dedup_triples(
-            canon.remap_triples(raw, cmap),
+        triples.final_triples(
+            linked_all,
+            cmap,
             # manifest row count decides the dedup shape — no count job
             two_level=wh.rows("linked") >= triples.TWO_LEVEL_MIN_ROWS,
         ),

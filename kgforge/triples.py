@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kgforge import canon
+
 TRIPLE_COLS = ["subj", "pred", "obj", "conv_id", "turn_idx", "confidence"]
 
 # Engage the two-level (per-conversation, then global) dedup aggregation
@@ -164,6 +166,17 @@ def dedup_triples(triples: DataFrame, two_level: bool = True) -> DataFrame:
             F.split("prov", sep)[1].cast("int").alias("turn_idx"),
             F.split("prov", sep)[3].cast("double").alias("confidence"),
         )
+    )
+
+
+def final_triples(linked: DataFrame, cmap: DataFrame, two_level: bool) -> DataFrame:
+    """Linked mentions → the final triple set: raw triples, remapped through
+    the (entity_id → canonical_id) map, first-emission deduped. The one
+    chain every triple producer shares (batch pipeline, streaming finalize,
+    registered ops); each caller decides ``two_level`` from metadata that is
+    free to read (see TWO_LEVEL_MIN_ROWS)."""
+    return dedup_triples(
+        canon.remap_triples(build_raw_triples(linked), cmap), two_level=two_level
     )
 
 

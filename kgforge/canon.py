@@ -20,6 +20,7 @@ full result.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -148,7 +149,12 @@ def canonical_map_auto(entities: DataFrame, edges: DataFrame) -> DataFrame:
     ent = entities.select("entity_id").distinct()
     if not rows:
         return ent.select("entity_id", F.col("entity_id").alias("canonical_id"))
-    cc = spark.createDataFrame(rows, "node string, component string")
+    # A pandas frame, not the list itself: it reaches the JVM as Arrow
+    # batches, while a list becomes a pickled RDD that starts a Python
+    # worker pool in every job that reads the map.
+    cc = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["node", "component"]), "node string, component string"
+    )
     return ent.join(F.broadcast(cc), ent.entity_id == cc.node, "left").select(
         "entity_id", F.coalesce("component", "entity_id").alias("canonical_id")
     )

@@ -14,7 +14,6 @@ back and anti-joins done partitions out of the input.
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,12 +42,13 @@ def with_lineage_part_of(df: DataFrame, cols: list[str], n: int = N_LINEAGE_PART
 
 
 def record_stage_cached(
-    wh: Warehouse, df_cached: DataFrame, stage: str, run_id: str
+    wh: Warehouse, df_cached: DataFrame, stage: str, run_id: str, wall_ms: int
 ) -> None:
     """Per-lineage-part counters via ONE aggregation over an already-cached
     DataFrame, landed driver-side with a pyarrow merge (no Spark write job).
     Use when the stage output is persisted in memory; use
-    record_stage_from_files when it's on disk partitioned by lineage_part."""
+    record_stage_from_files when it's on disk partitioned by lineage_part.
+    ``wall_ms`` is the stage's duration, stored on every row."""
     import pandas as pd
 
     counts = (
@@ -59,7 +59,7 @@ def record_stage_cached(
     counts["run_id"] = run_id
     counts["stage"] = stage
     counts["status"] = "done"
-    counts["wall_ms"] = int(time.time() * 1000)
+    counts["wall_ms"] = wall_ms
     wh.merge_local(
         CHECKPOINT_TABLE,
         counts[["run_id", "stage", "lineage_part", "rows_out", "status", "wall_ms"]],
@@ -68,13 +68,14 @@ def record_stage_cached(
 
 
 def record_stage_from_files(
-    wh: Warehouse, table: str, stage: str, run_id: str
+    wh: Warehouse, table: str, stage: str, run_id: str, wall_ms: int
 ) -> None:
     """Per-lineage-part counters from the snapshot's parquet FOOTERS — zero
     Spark jobs. Requires the snapshot to be partitioned by lineage_part
     (partition-aligned writes guarantee one dir per part). A job-based
     aggregation of a table we just wrote would re-scan it; at 10^12 turns the
-    metadata already knows the answer."""
+    metadata already knows the answer. ``wall_ms`` is the stage's duration,
+    stored on every row."""
     import glob
 
     import pandas as pd
@@ -90,7 +91,6 @@ def record_stage_from_files(
             for f in glob.glob(os.path.join(part_dir, "*.parquet"))
         )
         counts[part] = counts.get(part, 0) + n
-    now_ms = int(time.time() * 1000)
     pdf = pd.DataFrame(
         {
             "run_id": run_id,
@@ -98,7 +98,7 @@ def record_stage_from_files(
             "lineage_part": list(counts),
             "rows_out": list(counts.values()),
             "status": "done",
-            "wall_ms": now_ms,
+            "wall_ms": wall_ms,
         }
     )
     wh.merge_local(CHECKPOINT_TABLE, pdf, keys=["run_id", "stage", "lineage_part"])

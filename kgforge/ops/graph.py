@@ -177,18 +177,20 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    # Edge list + out-degree are reused by every iteration: persist ONE
-    # pre-joined (src, dst, outdeg) cut so each iteration is a single
-    # shuffle-join against the current ranks, not a re-derivation of the
-    # upstream plan (Catalyst has no cross-branch CSE — without this the
-    # whole edge derivation would re-run once per iteration).
+    # Cut the input's lineage ONCE at loop entry: every unrolled iteration
+    # joins these two localCheckpoint leaves only. A persisted cut truncates
+    # execution but still re-embeds the input's whole logical plan (for
+    # graph_pagerank, extract → link → canon → dedup) in each join reference
+    # for Catalyst to analyse; a leaf also adds no CacheManager entry, so
+    # repeated calls stack no cached copies. Every edge survives the
+    # out-degree join, so the nodes derive from ew.
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ew = edges.join(deg, "src").persist()
+    ew = edges.join(deg, "src").localCheckpoint()
     nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
+        ew.select(F.col("src").alias("node"))
+        .union(ew.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
     ranks = nodes.select("node", F.lit(PR_SCALE).cast("bigint").alias("rank"))
     for _ in range(iters):
@@ -205,9 +207,6 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
             "node",
             (F.lit(PR_BASE) + F.coalesce("m", F.lit(0))).cast("bigint").alias("rank"),
         )
-    # ew/nodes stay persisted: the returned plan references them once per
-    # iteration, and they only materialize at the caller's action — an
-    # unpersist here would silently re-derive the whole pipeline per use.
     return ranks.select(F.col("node").alias("node_id"), "rank")
 
 

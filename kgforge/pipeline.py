@@ -50,6 +50,10 @@ def run_pipeline(
     t0 = time.time()
     t_prev = t0
 
+    def elapsed_ms() -> int:
+        """Duration of the running stage so far: the checkpoint rows' wall_ms."""
+        return int((time.time() - t_prev) * 1000)
+
     def mark(stage: str) -> None:
         nonlocal t_prev
         now = time.time()
@@ -83,7 +87,7 @@ def run_pipeline(
         wh.write_snapshot("linked", linked)
         linked_all = linked  # fresh run: the cache IS the table contents
     # one cheap aggregation over the cache, landed driver-side (no write job)
-    metrics.record_stage_cached(wh, linked_all, "linked", cfg.run_id)
+    metrics.record_stage_cached(wh, linked_all, "linked", cfg.run_id, elapsed_ms())
     cfg.observed["linked_rows"] = wh.rows("linked")
     mark("extract_link")
 
@@ -114,7 +118,9 @@ def run_pipeline(
              part_determined_by_keys=True)
     # source_unique: dedup_triples output is grouped by exactly these keys —
     # the sink's defensive dropDuplicates would re-shuffle the whole table
-    metrics.record_stage_from_files(wh, "triples", "triples", cfg.run_id)
+    metrics.record_stage_from_files(
+        wh, "triples", "triples", cfg.run_id, elapsed_ms()
+    )
     mark("triples_merge")
 
     # ---- stage 4: nodes ---------------------------------------------------

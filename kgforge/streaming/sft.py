@@ -19,7 +19,8 @@ Scale notes: state is O(1) per live conversation (two turns), the exact
 shape GroupState's store handles at 10^9 keys; arriving rows group-shuffle
 once on conv_id (the same single exchange as the batch window). Dead
 conversations are EVICTED (ADVICE r04): each update arms an event-time
-timeout at max(batch event time) + EVICT_DELAY, so once the watermark
+timeout at the conversation's max event time so far + EVICT_DELAY (kept in
+state, so a batch of late turns never moves it earlier). Once the watermark
 passes a conversation's last turn by EVICT_DELAY its state is removed and
 the live-key set is bounded by conversations active in the last EVICT_DELAY
 window — not by all conversations ever seen. A turn arriving after its
@@ -37,9 +38,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# last-but-one turn (i2, r2, t2) then latest turn (i1, r1, t1); -1/'' = none
+# last-but-one turn (i2, r2, t2) then latest turn (i1, r1, t1); -1/'' = none.
+# last_ms: the max event time (epoch ms) ever seen for the conversation.
 PAIR_STATE_SCHEMA = (
-    "i2 int, r2 string, t2 string, i1 int, r1 string, t1 string"
+    "i2 int, r2 string, t2 string, i1 int, r1 string, t1 string, last_ms long"
 )
 PAIR_OUT_SCHEMA = (
     "conv_id string, turn_idx int, prompt_hash string, response_hash string,"
@@ -72,9 +74,9 @@ def _pair_fn(
         yield pd.DataFrame(_EMPTY_OUT)
         return
     if state.exists:
-        i2, r2, t2, i1, r1, t1 = state.get
+        i2, r2, t2, i1, r1, t1, last_ms = state.get
     else:
-        i2, r2, t2, i1, r1, t1 = -1, "", "", -1, "", ""
+        i2, r2, t2, i1, r1, t1, last_ms = -1, "", "", -1, "", "", 0
     out: list[tuple] = []
     batch = pd.concat(list(pdfs), ignore_index=True)
     # File order fixes cross-batch arrival order; within the batch, turn
@@ -87,12 +89,14 @@ def _pair_fn(
         elif r2 == "user" and r1 == "tool" and c_r == "assistant":
             out.append((key[0], i2, t2, c_t))
         i2, r2, t2, i1, r1, t1 = i1, r1, t1, c_i, c_r, c_t
-    state.update((i2, r2, t2, i1, r1, t1))
-    # Arm eviction at this batch's max event time + EVICT_DELAY. Spark
-    # requires the timeout timestamp to be strictly after the current
-    # watermark, so clamp for the late-but-accepted edge (a batch whose
-    # turns all trail the watermark by almost the full allowed lateness).
-    last_ms = int(batch["ts"].max().value // 1_000_000)
+    # Arm eviction at the max event time EVER seen + EVICT_DELAY: a batch
+    # holding only late turns must not pull the eviction earlier than the
+    # conversation's last turn allows. Spark requires the timeout timestamp
+    # to be strictly after the current watermark, so clamp for the
+    # late-but-accepted edge (a batch whose turns all trail the watermark by
+    # almost the full allowed lateness).
+    last_ms = max(last_ms, int(batch["ts"].max().value // 1_000_000))
+    state.update((i2, r2, t2, i1, r1, t1, last_ms))
     state.setTimeoutTimestamp(
         max(last_ms + EVICT_DELAY_MS, state.getCurrentWatermarkMs() + 1)
     )

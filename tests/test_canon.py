@@ -151,3 +151,22 @@ def test_auto_deep_descending_chain_no_recursion_error(spark):
     # c00000 is isolated and self-maps.
     assert got["c00000"] == "c00000"
     assert {got[f"c{i:05d}"] for i in range(1, n + 1)} == {"c00001"}
+
+
+def test_auto_driver_map_reaches_jvm_as_arrow(spark):
+    """The driver union-find's component map is built from a pandas frame:
+    a local Arrow relation, not a pickled Python RDD (which would start a
+    Python worker pool in every job that reads the map)."""
+    from kgforge.canon import canonical_map_auto
+
+    ents = spark.range(6).selectExpr("concat('n', id) AS entity_id")
+    edf = spark.createDataFrame(
+        [("n1", "n2", "x"), ("n3", "n2", "x"), ("n5", "n4", "x")],
+        "src string, dst string, source string",
+    )
+    cmap = canonical_map_auto(ents, edf)
+    plan = cmap._jdf.queryExecution().optimizedPlan().treeString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    got = {r["entity_id"]: r["canonical_id"] for r in cmap.collect()}
+    assert got == {"n0": "n0", "n1": "n1", "n2": "n1", "n3": "n1",
+                   "n4": "n4", "n5": "n4"}

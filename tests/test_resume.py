@@ -81,3 +81,19 @@ def test_checkpoint_metrics_recorded(spark, spark_corpus, tmp_path):
     stages = {r["stage"] for r in rows}
     assert {"linked", "triples"} <= stages
     assert all(r["rows_out"] >= 0 and r["status"] == "done" for r in rows)
+
+
+def test_checkpoint_wall_ms_is_stage_duration(spark, spark_corpus, tmp_path):
+    """_checkpoints.wall_ms holds each stage's duration, not an epoch
+    timestamp: it is non-negative and no longer than the whole run."""
+    tr, d, e = spark_corpus
+    cfg = PipelineConfig(warehouse_root=str(tmp_path / "wh"), run_id="r7",
+                         num_partitions=8, hot_threshold=200, target_rows=100)
+    run_pipeline(spark, tr, d, e, cfg)
+    rows = (
+        Warehouse(str(tmp_path / "wh")).read(spark, "_checkpoints")
+        .where(F.col("run_id") == "r7").collect()
+    )
+    walls = {(r["stage"], r["wall_ms"]) for r in rows}
+    assert {stage for stage, _ in walls} == {"linked", "triples"}
+    assert all(0 <= ms <= cfg.observed["wall_s"] * 1000 for _, ms in walls), walls

@@ -71,6 +71,33 @@ def test_pagerank_two_cycle_fixed_point(spark):
     assert got == {"x": 1_000_000, "y": 1_000_000}
 
 
+def test_pagerank_cuts_input_lineage_once(spark):
+    """The unrolled loop must join checkpointed leaves only: an operator of
+    the input's plan (here a Window) appears zero times in the optimized
+    loop plan, where persisted cuts re-embed it once per join reference.
+    The cuts add no CacheManager entry, so repeated calls stack nothing."""
+    import re
+
+    from pyspark.sql import Window
+
+    from kgforge.ops.graph import pagerank
+
+    raw = spark.createDataFrame(
+        [("a", "b", 1), ("b", "a", 2), ("c", "a", 3), ("c", "a", 4)],
+        "src string, dst string, v int",
+    )
+    first = F.row_number().over(Window.partitionBy("src", "dst").orderBy("v"))
+    edges = raw.withColumn("rn", first).where("rn = 1").select("src", "dst")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    ranks = pagerank(edges, iters=3)
+    assert cache.numCachedEntries() == before
+    plan = ranks._jdf.queryExecution().optimizedPlan().treeString()
+    assert re.findall(r"\bWindow\b", plan) == []
+    got = {r.node_id: r.rank for r in ranks.collect()}
+    assert got == {"a": 1_741_625, "b": 1_108_375, "c": 150_000}
+
+
 # ------------------------------------------------------------------ clusters
 def _chain_docs(spark):
     """Three overlapping-window docs where minhash emits exactly the chain

@@ -80,3 +80,23 @@ def test_application_id_keys_one_module():
         if "applicationId" in p.read_text()
     )
     assert hits == ["corpus.py"]
+
+
+# Persist call sites under kgforge/. Shared cuts belong in corpus.cached and
+# loop cuts in localCheckpoint leaves; lower this when a persist goes away.
+PERSIST_SITES = 27
+
+
+def test_persist_call_sites_do_not_grow():
+    """A new .persist()/.cache() call site is a cut the session cache does
+    not own: route it through corpus.cached or a localCheckpoint instead."""
+    import re
+
+    import kgforge
+
+    root = pathlib.Path(kgforge.__file__).parent
+    sites = sum(
+        len(re.findall(r"\.(?:persist|cache)\(", p.read_text()))
+        for p in root.rglob("*.py")
+    )
+    assert sites <= PERSIST_SITES, f"{sites} persist call sites > {PERSIST_SITES}"

@@ -403,6 +403,59 @@ def test_streaming_sft_state_evicted_after_watermark(spark):
     assert got[0].conv_id == "b"
 
 
+def test_streaming_sft_late_batch_keeps_eviction_arm(spark):
+    """A micro-batch holding only LATE turns of a conversation must not pull
+    its eviction earlier than its last turn + EVICT_DELAY (2 h). Replay
+    order (global seq key, one row per micro-batch; watermark = max event
+    time - 1 h, applied from the next batch):
+
+      batch0  conv a, user, ts 03:00       -> a armed at 05:00
+      batch1  conv b, user, ts 03:30       -> watermark 02:30
+      batch2  conv a, tool, ts 02:45 (late but accepted) -> a's arm stays
+              05:00; re-arming from this batch alone would give 04:45
+      batch3  conv b, assistant, ts 05:50  -> watermark 04:50
+      batch4  conv b, tool, ts 05:51       -> 04:50 < 05:00: a stays alive
+              (a 04:45 arm would evict it here)
+      batch5  conv a, assistant, ts 05:52  -> user->tool->assistant pair
+
+    So streaming must emit BOTH batch pairs; a non-monotone arm loses a's."""
+    from kgforge.ops import convo
+    from kgforge.streaming import replay, sft
+
+    tr = spark.createDataFrame(
+        [
+            (0, "a", 0, "user", "none", "early question", 10800),
+            (1, "b", 0, "user", "none", "live question", 12600),
+            (2, "a", 1, "tool", "search", "late tool output", 9900),
+            (3, "b", 1, "assistant", "none", "live answer", 21000),
+            (4, "b", 2, "tool", "search", "trailing tool", 21060),
+            (5, "a", 2, "assistant", "none", "answer after late batch", 21120),
+        ],
+        "seq int, conv_id string, turn_idx int, role string,"
+        " tool string, text string, sec int",
+    ).withColumn(
+        "ts",
+        F.expr(
+            "timestamp '2024-01-01 00:00:00'"
+            " + make_interval(0, 0, 0, 0, 0, 0, sec)"
+        ),
+    ).drop("sec")
+    cols = [
+        "conv_id", "turn_idx", "prompt_hash", "response_hash",
+        "prompt_tokens", "response_tokens",
+    ]
+    want_rows = _rows(convo.sft_pairs(tr.drop("seq")), cols)
+    assert [r[0] for r in want_rows] == ["a", "b"]
+
+    stream = replay.replay_stream(
+        spark, tr, ["seq"], n_files=6, prefix="kgforge_sft_late_"
+    ).drop("seq")
+    got = jobs.run_available_now(
+        sft.sft_pairs_stream(stream), "append", "sft_late_test"
+    )
+    assert _rows(got, cols) == want_rows
+
+
 def test_streaming_asof_maintenance_equals_batch(spark):
     """The stateful as-of maintainer must converge to the batch
     latest-wins answer even when winners are OVERTURNED across

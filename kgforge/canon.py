@@ -1,21 +1,18 @@
 """Stage C — canonicalization: connected components over same-as xref edges
-via iterative DataFrame min-label propagation (SURVEY.md §2.A A7, §4.3).
+(SURVEY.md §2.A A7, §4.3).
 
 The reference merges items sharing an xref; the batch equivalent is the
 connected components of the same-as graph, with the canonical id = minimum
 entity id of each component (deterministic, matches the bot's first-win
 merge direction).
 
-Algorithm: min-label propagation with POINTER JUMPING — each iteration does
-(1) a neighbor-min step (labels flow across edges) and (2) a shortcut step
-(label ← label-of-label), which contracts label chains geometrically, so a
-path of length d converges in O(log d) iterations instead of O(d). Each
-iteration `localCheckpoint`s to truncate lineage (Catalyst has no recursion;
-an unchecked loop rebuilds an exponentially deep plan, SURVEY.md §4.3).
-
-Convergence check: count of labels that changed this iteration — a cheap
-aggregate over the (node → label) table, not a join against the previous
-full result.
+Two strategies, one answer (canonical_map_auto picks by edge count): a
+driver-side union-find when the edge set fits the driver, and the
+distributed large-star/small-star contraction (connected_components_star)
+above that. Each star round `localCheckpoint`s to truncate lineage
+(Catalyst has no recursion; an unchecked loop rebuilds an exponentially
+deep plan, SURVEY.md §4.3), and a path of d nodes converges in about
+log2(d) + 1 rounds.
 """
 
 from __future__ import annotations
@@ -24,77 +21,22 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def connected_components(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 40
-) -> DataFrame:
-    """edges(src, dst) undirected → (node:string, component:string).
-
-    component = min node id (lexicographic) reachable from the node.
-    Isolated nodes don't appear in `edges`; callers union them back
-    (see canonical_map).
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    bidir = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    bidir = bidir.repartition("a").localCheckpoint(eager=True)
-
-    labels = (
-        bidir.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-
-    for it in range(max_iter):
-        # (1) neighbor-min: every node learns the smallest label adjacent to it
-        nbr = (
-            bidir.join(labels, bidir.a == labels.node)
-            .select(F.col("b").alias("node"), "label")
-        )
-        new = (
-            labels.select("node", "label")
-            .unionByName(nbr)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        # (2) pointer jumping: label ← label(label), contracting chains
-        lmap = new.select(F.col("node").alias("l_node"), F.col("label").alias("l_label"))
-        new = (
-            new.join(lmap, new.label == lmap.l_node, "left")
-            .select("node", F.coalesce("l_label", "label").alias("label"))
-        )
-        new = new.localCheckpoint(eager=True)
-        # convergence check every 2nd round: pointer jumping converges in
-        # O(log d) rounds, so a stale check costs at most one extra cheap
-        # iteration while halving the count-job overhead of the loop
-        if it % 2 == 1 or it == max_iter - 1:
-            changed = (
-                new.alias("n")
-                .join(labels.alias("o"), "node")
-                .where(F.col("n.label") != F.col("o.label"))
-                .limit(1)
-                .count()
-            )
-            labels = new
-            if changed == 0:
-                break
-        else:
-            labels = new
-    return labels.select("node", F.col("label").alias("component"))
+# Star rounds before connected_components_star gives up. A path of n nodes
+# contracts in about log2(n) rounds, plus one round that sees the fixpoint
+# (measured, rounds in all: 200 nodes 9, 512 nodes 10, 2,000 nodes 12), so
+# 20 covers paths of up to about half a million nodes; past that the loop
+# raises rather than return a partial map.
+STAR_MAX_ROUNDS = 20
 
 
-def canonical_map(
-    entities: DataFrame, edges: DataFrame, algo: str = "star"
-) -> DataFrame:
+def canonical_map(entities: DataFrame, edges: DataFrame) -> DataFrame:
     """All entities → (entity_id, canonical_id); isolated entities map to self.
 
-    algo="star" (default): large-star/small-star contraction — benched 1.57×
-    faster than pointer-jumping label propagation at 4M edges (the gap grows
-    with scale because the star working set contracts each round).
-    algo="jump": the pointer-jumping fixpoint (kept for comparison/tests).
+    Components come from connected_components_star (large-star/small-star
+    contraction; benched 1.57× faster than pointer-jumping label
+    propagation at 4M edges, BENCH/BASELINE.md).
     """
-    fn = connected_components_star if algo == "star" else connected_components
-    cc = fn(edges)
+    cc = connected_components_star(edges)
     ent = entities.select("entity_id").distinct()
     return ent.join(cc, ent.entity_id == cc.node, "left").select(
         "entity_id", F.coalesce("component", "entity_id").alias("canonical_id")
@@ -106,7 +48,7 @@ def canonical_map(
 # the driver comfortably while the iterative DataFrame fixpoint pays
 # O(iterations) shuffle rounds no matter how small the graph is. Below this
 # threshold a driver-side union-find (seconds, exact) wins outright; above
-# it the distributed label propagation takes over. Both produce the
+# it the distributed star contraction takes over. Both produce the
 # identical min-label component map (asserted in tests/test_canon.py).
 DRIVER_CC_MAX_EDGES = 2_000_000
 
@@ -179,7 +121,7 @@ def remap_triples(triples: DataFrame, canon: DataFrame) -> DataFrame:
 
 
 def connected_components_star(
-    edges: DataFrame, src: str = "src", dst: str = "dst", max_rounds: int = 20
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Alternating large-star / small-star connected components
     (two-phase min-label contraction, cf. the MapReduce CC literature):
@@ -193,8 +135,9 @@ def connected_components_star(
     CONTRACTS geometrically — unlike plain label propagation the working set
     shrinks as stars collapse, so later rounds are nearly free. Converges
     when the edge set is a fixed star forest; roots map to themselves.
-    Produces the identical (node → min-of-component) map as
-    connected_components (equality-tested in tests/test_canon.py).
+    Raises RuntimeError if the edge set is still changing after
+    STAR_MAX_ROUNDS rounds. The (node → min-of-component) map is tested
+    against union-find and DuckDB recursion in tests/test_canon.py.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -241,7 +184,7 @@ def connected_components_star(
 
     cur = e
     prev_sig = None
-    for _ in range(max_rounds):
+    for _ in range(STAR_MAX_ROUNDS):
         cur = small_star(large_star(cur)).localCheckpoint(eager=True)
         sig = cur.select(
             F.count(F.lit(1)).alias("n"),
@@ -251,6 +194,10 @@ def connected_components_star(
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected_components_star: no fixpoint after {STAR_MAX_ROUNDS} rounds"
+        )
 
     roots = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
     return all_nodes.join(roots, "node", "left").select(

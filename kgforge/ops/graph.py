@@ -6,6 +6,8 @@ scan (SURVEY.md §2.B graph pane).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 from kgforge import canon, corpus
@@ -515,48 +517,69 @@ BFS_ITERS = 4
 BFS_SEEDS = 3
 
 
-def _bfs_iter_sql(prev: str, nxt: str) -> str:
-    """One unrolled BFS frontier-relaxation as a DuckDB CTE."""
+def _relax_iter_sql(prev: str, nxt: str, adj: str, w: str) -> str:
+    """One unrolled min-plus relaxation as a DuckDB CTE over ``adj`` with
+    edge weight ``w`` (an expression over the adjacency alias ``a``)."""
     return f"""
     {nxt} AS (
       SELECT node, min(dist) AS dist FROM (
         SELECT node, dist FROM {prev}
         UNION ALL
-        SELECT a.v AS node, d.dist + 1 AS dist
-        FROM adj2 a JOIN {prev} d ON a.u = d.node)
+        SELECT a.v AS node, d.dist + {w} AS dist
+        FROM {adj} a JOIN {prev} d ON a.u = d.node)
       GROUP BY node
     )"""
 
 
-def bfs_distances(adj: DataFrame, seeds: DataFrame, iters: int = BFS_ITERS) -> DataFrame:
-    """Multi-source BFS over ``adj(u, v)`` from ``seeds(node)`` →
-    (node_id, dist), bounded to ``iters`` hops. Each iteration is one
-    join + min-aggregate over the (persisted) adjacency — O(iters) shuffles,
-    the same iterative-dataflow shape as PageRank; min over BIGINT is exact
-    and order-independent in both engines."""
+def fixed_rounds(
+    state: DataFrame, step: Callable[[DataFrame], DataFrame], n: int
+) -> DataFrame:
+    """``step`` applied ``n`` times to ``state``, localCheckpointing every
+    state a round produces that feeds a next round, never the last one (the
+    input ``state`` is the caller's to cut).
+
+    A round reads its input state twice (the relaxation's join and union,
+    kcore's degree aggregate and semi-join), so without the cut each round
+    re-derives every prior round twice over: exponential replay (measured
+    88 s → ~8 s for BFS, 46 s → seconds for kcore, at sf0.001). The last
+    state feeds only the returned plan, so a checkpoint there would spend
+    one more materialization of the loop's biggest dataset for nothing.
+
+    Single-action assumption: the returned plan leaves its last round
+    uncheckpointed, so a second action on it re-runs that round.
+    """
+    for rd in range(n):
+        if rd:
+            state = state.localCheckpoint()
+        state = step(state)
+    return state
+
+
+def shortest_distances(adj: DataFrame, seeds: DataFrame, iters: int) -> DataFrame:
+    """Bellman-Ford over ``adj(u, v, w)`` from ``seeds(node)`` →
+    (node_id, dist), bounded to ``iters`` relaxations; BFS is the w = 1
+    case. Each relaxation is one join of the frontier against the
+    adjacency plus a min-aggregate — O(iters) shuffles, the same
+    iterative-dataflow shape as PageRank. Weights and distances are BIGINT,
+    so min() is exact and order-independent in both engines.
+
+    The adjacency is cut once at loop entry with a localCheckpoint leaf
+    (the pagerank rule): every round joins the leaf, and a call adds no
+    CacheManager entry, so repeated calls stack no cached copies."""
     from pyspark.sql import functions as F
 
-    adj = adj.persist()
-    dist = seeds.select("node", F.lit(0).cast("bigint").alias("dist"))
-    for it in range(iters):
+    adj = adj.localCheckpoint()
+
+    def relax(dist: DataFrame) -> DataFrame:
         prop = adj.join(dist, adj.u == dist.node).select(
-            F.col("v").alias("node"), (F.col("dist") + F.lit(1)).alias("dist")
+            F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
-        dist = (
-            dist.unionAll(prop).groupBy("node").agg(F.min("dist").alias("dist"))
-        )
-        # The frontier feeds the NEXT iteration twice (relaxation join +
-        # union), so without cutting lineage here the plan re-derives every
-        # prior iteration 2× per round — exponential replay (measured 88s →
-        # ~8s at sf0.001). localCheckpoint materializes the small frontier
-        # and truncates the lineage, same as the CC fixpoint (canon.py).
-        # The LAST iteration's frontier feeds nothing — it is returned and
-        # evaluated exactly once by the caller's action, so a checkpoint
-        # there would spend a whole extra materialization stage (the
-        # graph_khop last-delta rule).
-        if it < iters - 1:
-            dist = dist.localCheckpoint()
-    return dist.select(F.col("node").alias("node_id"), "dist")
+        return dist.unionAll(prop).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    dist = seeds.select("node", F.lit(0).cast("bigint").alias("dist"))
+    return fixed_rounds(dist, relax, iters).select(
+        F.col("node").alias("node_id"), "dist"
+    )
 
 
 @register(
@@ -567,29 +590,32 @@ def bfs_distances(adj: DataFrame, seeds: DataFrame, iters: int = BFS_ITERS) -> D
       ORDER BY node LIMIT {BFS_SEEDS}
     ),
     bd0 AS (SELECT node, CAST(0 AS BIGINT) AS dist FROM bfs_seeds),
-    {",".join(_bfs_iter_sql(f"bd{i}", f"bd{i + 1}") for i in range(BFS_ITERS))}
+    {",".join(_relax_iter_sql(f"bd{i}", f"bd{i + 1}", "adj2", "1")
+              for i in range(BFS_ITERS))}
     SELECT node AS node_id, dist FROM bd{BFS_ITERS}
     """,
     doc=(
         f"Multi-source BFS ({BFS_ITERS} hops from the {BFS_SEEDS} "
         "lexicographically-first entities) over the undirected canonical "
-        "entity graph: per hop one join + min-aggregate against the "
-        "persisted adjacency — O(hops) shuffles of the frontier, nothing "
-        "super-linear. Distances are BIGINT so min() is exact in both "
-        "engines; unreached nodes are absent (frontier semantics)."
+        "entity graph: graph_sssp's relaxation with every weight 1, per "
+        "hop one join + min-aggregate against the checkpointed adjacency — "
+        "O(hops) shuffles of the frontier, nothing super-linear. Distances "
+        "are BIGINT so min() is exact in both engines; unreached nodes are "
+        "absent (frontier semantics)."
     ),
 )
 def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     und = undirected_entity_edges(spark, sf_dir)
-    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    w = F.lit(1).cast("bigint").alias("w")
+    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v"), w).unionAll(
+        und.select(F.col("b").alias("u"), F.col("a").alias("v"), w)
     )
     seeds = adj.select(F.col("u").alias("node")).distinct().orderBy("node").limit(
         BFS_SEEDS
     )
-    return bfs_distances(adj, seeds)
+    return shortest_distances(adj, seeds, BFS_ITERS)
 
 
 # ------------------------------------------------------- incremental (CDC)
@@ -840,26 +866,21 @@ def kcore_peel(
 ) -> DataFrame:
     """Peel ``und(a, b)`` (distinct undirected edges) → (part_id, deg).
 
-    Scale notes: the edge cut persists per round (each round's set feeds a
-    degree aggregate AND the next round's two semi-joins — no cross-branch
-    CSE) and shrinks monotonically; K is derived from the degree histogram
-    (driver collect bounded by the distinct-degree count, ≤ max degree) and
-    inlined as a literal so every round's filter is a plain predicate, not
-    a join against a 1-row table.
+    Scale notes: the edge cut is checkpointed at entry and per round by
+    fixed_rounds (each round's set feeds a degree aggregate AND the
+    round's two semi-joins) and shrinks monotonically; K is derived from
+    the degree histogram (driver collect bounded by the distinct-degree
+    count, ≤ max degree) and inlined as a literal so every round's filter
+    is a plain predicate, not a join against a 1-row table.
     """
     from pyspark.sql import functions as F
 
-    # Each round's edge set feeds the NEXT round TWICE (the degree-aggregate
-    # branch that decides who survives AND the semi-join input) — the BFS/CC
-    # replay trap: without cutting lineage per round the plan re-derives
-    # every prior round 2x per branch. localCheckpoint (eager) materializes
-    # the shrinking edge cut and truncates the plan, exactly as in
-    # bfs_distances / the CC fixpoint (measured here: 46s -> seconds at
-    # sf0.001).
+    def degrees(ed: DataFrame) -> DataFrame:
+        return ed.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
+
     e = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         und.select(F.col("b").alias("u"), F.col("a").alias("v"))
     ).localCheckpoint()
-    deg = e.groupBy("u").agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     # K from the DEGREE HISTOGRAM, not an ungrouped exact percentile: Spark's
     # percentile() buffers every input value in one aggregation state, so at
     # billions of nodes the final merge holds the whole degree column on one
@@ -871,25 +892,18 @@ def kcore_peel(
     # bit-identical to DuckDB's floor(quantile_cont(deg, pct)).
     k = _histogram_percentile_floor(
         [(r["deg"], r["n"]) for r in
-         deg.groupBy("deg").agg(F.count(F.lit(1)).alias("n")).collect()],
+         degrees(e).groupBy("deg").agg(F.count(F.lit(1)).alias("n")).collect()],
         pct,
     )
-    for rd in range(rounds):
-        alive = deg.where(F.col("deg") >= k).select("u")
-        e = (
-            e.join(alive, "u", "semi")
+
+    def peel(ed: DataFrame) -> DataFrame:
+        alive = degrees(ed).where(F.col("deg") >= k).select("u")
+        return (
+            ed.join(alive, "u", "semi")
             .join(alive.withColumnRenamed("u", "v"), "v", "semi")
             .select("u", "v")
         )
-        # Each round's edge cut feeds the NEXT round twice (its degree
-        # aggregate decides who survives AND it is the semi-join input) —
-        # checkpoint it. The LAST round's cut feeds only the returned
-        # degree aggregate, evaluated once: no checkpoint there (the
-        # graph_khop last-delta rule), which skips one materialization of
-        # the loop's biggest dataset.
-        if rd < rounds - 1:
-            e = e.localCheckpoint()
-        deg = e.groupBy("u").agg(
-            F.count(F.lit(1)).cast("bigint").alias("deg")
-        )
-    return deg.select(F.col("u").alias("part_id"), "deg")
+
+    return degrees(fixed_rounds(e, peel, rounds)).select(
+        F.col("u").alias("part_id"), "deg"
+    )

@@ -17,7 +17,8 @@ Scale notes (graded per op in the docstrings):
   same wedge bound as triangle counting — at 100 TB the hub cap pattern
   from graph_jaccard applies, noted in the docstring.
 - graph_sssp is O(iters) shuffles of the weighted edge set (the PageRank /
-  BFS iterative-dataflow shape) with localCheckpoint lineage cuts.
+  BFS iterative-dataflow shape) with localCheckpoint lineage cuts; it
+  shares graph.shortest_distances with graph_bfs.
 - graph_comp_sizes aggregates the canonical map twice; the second
   aggregate's input is one row per component.
 """
@@ -188,20 +189,6 @@ _W_SQL = (
 )
 
 
-def _sssp_iter_sql(prev: str, nxt: str) -> str:
-    """One unrolled Bellman-Ford relaxation as a DuckDB CTE (min-plus over
-    the weighted adjacency; min over BIGINT is exact in both engines)."""
-    return f"""
-    {nxt} AS (
-      SELECT node, min(dist) AS dist FROM (
-        SELECT node, dist FROM {prev}
-        UNION ALL
-        SELECT a.v AS node, d.dist + a.w AS dist
-        FROM sp_adj a JOIN {prev} d ON a.u = d.node)
-      GROUP BY node
-    )"""
-
-
 @register(
     "graph_sssp",
     sql=graph._GRAPH_SQL_PREFIX + f""",
@@ -213,7 +200,8 @@ def _sssp_iter_sql(prev: str, nxt: str) -> str:
       ORDER BY node LIMIT {SSSP_SEEDS}
     ),
     sd0 AS (SELECT node, CAST(0 AS BIGINT) AS dist FROM sp_seeds),
-    {",".join(_sssp_iter_sql(f"sd{i}", f"sd{i + 1}") for i in range(SSSP_ITERS))}
+    {",".join(graph._relax_iter_sql(f"sd{i}", f"sd{i + 1}", "sp_adj", "a.w")
+              for i in range(SSSP_ITERS))}
     SELECT node AS node_id, dist FROM sd{SSSP_ITERS}
     """,
     doc=(
@@ -222,27 +210,21 @@ def _sssp_iter_sql(prev: str, nxt: str) -> str:
         f"{SSSP_SEEDS} lexicographically-first entities) over the "
         "undirected canonical entity graph with deterministic integer edge "
         f"weights 1 + md5-nibble(a|b) % {SSSP_W_MOD} — the weighted "
-        "counterpart of graph_bfs. Each relaxation is one shuffle-join of "
-        "the frontier against the persisted weighted adjacency plus a "
-        "min-aggregate: O(iters) shuffles of the edge set, per-iteration "
-        "localCheckpoint cuts the doubling lineage (the measured 88s→8s "
-        "BFS fix applies identically). All distances BIGINT so min() is "
-        "order-independent and the oracle hash exact."
+        "counterpart of graph_bfs, sharing its relaxation loop. Each "
+        "relaxation is one shuffle-join of the frontier against the "
+        "checkpointed weighted adjacency plus a min-aggregate: O(iters) "
+        "shuffles of the edge set, per-iteration localCheckpoint cuts the "
+        "doubling lineage (measured 88s→8s on BFS). All distances BIGINT "
+        "so min() is order-independent and the oracle hash exact."
     ),
 )
 def graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = graph.undirected_entity_edges(spark, sf_dir)
     w = (1 + graph._edge_nib(F.col("a"), F.col("b")) % SSSP_W_MOD).cast(
         "bigint"
-    )
-    adj = (
-        und.select(F.col("a").alias("u"), F.col("b").alias("v"), w.alias("w"))
-        .unionAll(
-            und.select(
-                F.col("b").alias("u"), F.col("a").alias("v"), w.alias("w")
-            )
-        )
-        .persist()
+    ).alias("w")
+    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v"), w).unionAll(
+        und.select(F.col("b").alias("u"), F.col("a").alias("v"), w)
     )
     seeds = (
         adj.select(F.col("u").alias("node"))
@@ -250,31 +232,7 @@ def graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("node")
         .limit(SSSP_SEEDS)
     )
-    return sssp_distances(adj, seeds)
-
-
-def sssp_distances(
-    adj: DataFrame, seeds: DataFrame, iters: int = SSSP_ITERS
-) -> DataFrame:
-    """Bellman-Ford over ``adj(u, v, w)`` from ``seeds(node)`` →
-    (node_id, dist): ``iters`` min-plus relaxations, each one shuffle-join
-    of the frontier against the adjacency plus a min-aggregate."""
-    dist = seeds.select("node", F.lit(0).cast("bigint").alias("dist"))
-    for it in range(iters):
-        prop = adj.join(dist, adj.u == dist.node).select(
-            F.col("v").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-        dist = (
-            dist.unionAll(prop).groupBy("node").agg(F.min("dist").alias("dist"))
-        )
-        # Same lineage trap as bfs_distances: the frontier feeds the next
-        # iteration twice (relaxation join + union), so each round would
-        # re-derive all prior rounds 2x without the checkpoint. The LAST
-        # round's frontier feeds nothing (returned, evaluated once) — no
-        # checkpoint there (the graph_khop last-delta rule).
-        if it < iters - 1:
-            dist = dist.localCheckpoint()
-    return dist.select(F.col("node").alias("node_id"), "dist")
+    return graph.shortest_distances(adj, seeds, SSSP_ITERS)
 
 
 # -------------------------------------------------------------- comp sizes

@@ -150,8 +150,8 @@ def udf_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_cc",
     sql=_PRELUDE + "\nSELECT entity_id, canonical_id FROM canonical",
     doc=(
-        "Connected components via iterative min-label propagation with pointer "
-        "jumping + localCheckpoint per iteration (SURVEY.md §4.3). Oracle "
+        "Connected components via large-star/small-star contraction + "
+        "localCheckpoint per round (SURVEY.md §4.3). Oracle "
         "recomputes components independently (group-min over the edge-generating "
         "rule); structural stress (chains/stars) is pytest vs DuckDB recursion."
     ),

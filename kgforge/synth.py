@@ -16,7 +16,7 @@ Structure mirrors what the real 10^12-turn corpus would stress:
 - ~5% ambiguous surfaces (2–3 entity_ids) — forces rank-1 disambiguation
   (highest prior, then lexicographic entity_id).
 - Same-as clusters of size 1–6 plus 2 long chains and 1 star — stresses the
-  CC fixpoint's O(log d) pointer jumping (SURVEY.md §4.3).
+  CC fixpoint's O(log d) star contraction (SURVEY.md §4.3).
 """
 
 from __future__ import annotations

@@ -1,7 +1,8 @@
 """Connected-components canonicalization vs two independent oracles:
 pure-Python union-find and DuckDB WITH RECURSIVE (SURVEY.md §5.2-4).
-Stress shapes: long chains (pointer-jumping must converge in O(log d)),
-stars, and random graphs."""
+The distributed path under test is large-star/small-star
+(connected_components_star). Stress shapes: long chains (star contraction
+must converge in O(log d) rounds), stars, and random graphs."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import random
 import duckdb
 import pytest
 
-from kgforge.canon import canonical_map, connected_components
+from kgforge.canon import canonical_map, connected_components_star
 from tests.oracle_ref import canonical_map as uf_canonical
 
 
@@ -18,7 +19,7 @@ def _spark_cc(spark, edges: list[tuple[str, str]]) -> dict[str, str]:
     df = spark.createDataFrame(
         [(a, b, "t") for a, b in edges], schema="src string, dst string, source string"
     )
-    return {r["node"]: r["component"] for r in connected_components(df).collect()}
+    return {r["node"]: r["component"] for r in connected_components_star(df).collect()}
 
 
 def test_chain_converges_logarithmically(spark):
@@ -88,15 +89,16 @@ def test_canonical_map_isolated_nodes_self_map(spark):
 
 @pytest.mark.parametrize("n_iter_chain", [512])
 def test_long_chain_within_max_iter(spark, n_iter_chain):
-    """A 512-node path needs ~log2(512)=9 pointer-jumping rounds, far under
-    max_iter=40 — guards against regressing to O(d) plain propagation."""
+    """A 512-node path takes 9 star rounds (log2(512)) plus one that sees
+    the fixpoint, far under STAR_MAX_ROUNDS=20 — guards against regressing
+    to O(d) plain propagation."""
     edges = [(f"p{i:05d}", f"p{i + 1:05d}") for i in range(n_iter_chain - 1)]
     got = _spark_cc(spark, edges)
     assert set(got.values()) == {"p00000"}
 
 
 def test_auto_matches_distributed(spark):
-    """Driver union-find path and distributed label propagation must produce
+    """Driver union-find path and distributed star contraction must produce
     the identical canonical map (canonical_map_auto strategy switch)."""
     from kgforge.canon import canonical_map_auto
 
@@ -110,28 +112,16 @@ def test_auto_matches_distributed(spark):
     assert a == b
 
 
-def test_star_cc_matches_label_propagation(spark):
-    """large-star/small-star CC must equal the pointer-jumping fixpoint on
-    random graphs, chains, and stars."""
-    from kgforge.canon import connected_components_star
+def test_star_cc_raises_when_rounds_run_out(spark, monkeypatch):
+    """A 2,000-node path needs 11 star rounds plus one that sees the
+    fixpoint. With the round budget cut below that, the loop must raise
+    instead of returning a partial map."""
+    from kgforge import canon
 
-    rng = random.Random(33)
-    cases = []
-    nodes = [f"v{i:03d}" for i in range(100)]
-    cases.append([(rng.choice(nodes), rng.choice(nodes)) for _ in range(80)])
-    cases.append([(f"p{i:04d}", f"p{i + 1:04d}") for i in range(150)])  # chain
-    cases.append([("hub", f"l{i:03d}") for i in range(60)])  # star
-    for edges in cases:
-        edges = [(a, b) for a, b in edges if a != b]
-        df = spark.createDataFrame(
-            [(a, b, "t") for a, b in edges], "src string, dst string, source string"
-        )
-        want = _spark_cc(spark, edges)
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components_star(df).collect()
-        }
-        assert got == want
+    monkeypatch.setattr(canon, "STAR_MAX_ROUNDS", 5)
+    edges = [(f"q{i:05d}", f"q{i + 1:05d}") for i in range(1999)]
+    with pytest.raises(RuntimeError, match="no fixpoint after 5 rounds"):
+        _spark_cc(spark, edges)
 
 
 def test_auto_deep_descending_chain_no_recursion_error(spark):

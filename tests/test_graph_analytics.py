@@ -1,8 +1,9 @@
 """Hand-verified fixtures for the round-3 graph-analytics operators
 (degree-oriented triangle counting, shared-neighbor link prediction,
-bounded-hop BFS) and batch sessionization. The driver oracle checks the
-same operators value-exactly against DuckDB on the sf corpora; these
-fixtures pin the SEMANTICS on graphs small enough to verify by eye."""
+bounded-hop BFS — the w = 1 case of graph.shortest_distances) and batch
+sessionization. The driver oracle checks the same operators value-exactly
+against DuckDB on the sf corpora; these fixtures pin the SEMANTICS on
+graphs small enough to verify by eye."""
 
 from __future__ import annotations
 
@@ -52,16 +53,23 @@ def test_jaccard_excludes_adjacent_and_min_common(spark):
     assert graph.jaccard_candidates(_und(spark, tri)).count() == 0
 
 
+def _unit_adj(und):
+    """Both directions of ``und(a, b)`` as ``adj(u, v, w)`` with w = 1: BFS."""
+    w = F.lit(1).cast("bigint").alias("w")
+    return und.select(F.col("a").alias("u"), F.col("b").alias("v"), w).unionAll(
+        und.select(F.col("b").alias("u"), F.col("a").alias("v"), w)
+    )
+
+
 def test_bfs_path_distances(spark):
     # Path n0-..-n5 from seed n0: BFS_ITERS=4 hops reach n4, not n5.
     path = [(f"n{i}", f"n{i + 1}") for i in range(5)]
     und = _und(spark, path)
-    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    adj = _unit_adj(und)
     seeds = spark.createDataFrame([("n0",)], "node string")
     got = {r["node_id"]: r["dist"]
-           for r in graph.bfs_distances(adj, seeds).collect()}
+           for r in graph.shortest_distances(adj, seeds, graph.BFS_ITERS)
+           .collect()}
     assert got == {"n0": 0, "n1": 1, "n2": 2, "n3": 3, "n4": 4}
 
 
@@ -69,13 +77,42 @@ def test_bfs_multi_source_min(spark):
     # Two seeds at both ends of the path: distances are the min over seeds.
     path = [(f"n{i}", f"n{i + 1}") for i in range(4)]
     und = _und(spark, path)
-    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
+    adj = _unit_adj(und)
     seeds = spark.createDataFrame([("n0",), ("n4",)], "node string")
     got = {r["node_id"]: r["dist"]
-           for r in graph.bfs_distances(adj, seeds).collect()}
+           for r in graph.shortest_distances(adj, seeds, graph.BFS_ITERS)
+           .collect()}
     assert got == {"n0": 0, "n1": 1, "n2": 2, "n3": 1, "n4": 0}
+
+
+def test_shortest_distances_cuts_adjacency_once(spark):
+    """The relaxation joins a localCheckpoint leaf of the adjacency: an
+    operator of the input's plan (here a Window) appears zero times in the
+    loop plan, and a call adds no CacheManager entry, so repeated calls
+    stack no cached copies."""
+    import re
+
+    from pyspark.sql import Window
+
+    raw = spark.createDataFrame(
+        [("n0", "n1", 1, 1), ("n0", "n1", 5, 2), ("n1", "n2", 2, 1),
+         ("n0", "n2", 9, 1)],
+        "a string, b string, w long, v int",
+    )
+    first = F.row_number().over(Window.partitionBy("a", "b").orderBy("v"))
+    und = raw.withColumn("rn", first).where("rn = 1")
+    adj = und.select(F.col("a").alias("u"), F.col("b").alias("v"), "w").unionAll(
+        und.select(F.col("b").alias("u"), F.col("a").alias("v"), "w")
+    )
+    seeds = spark.createDataFrame([("n0",)], "node string")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    dist = graph.shortest_distances(adj, seeds, 3)
+    assert cache.numCachedEntries() == before
+    plan = dist._jdf.queryExecution().optimizedPlan().treeString()
+    assert re.findall(r"\bWindow\b", plan) == []
+    got = {r["node_id"]: r["dist"] for r in dist.collect()}
+    assert got == {"n0": 0, "n1": 1, "n2": 3}
 
 
 def test_sessionize_gap_boundaries(spark):

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kgforge.ops import kgquery
+from kgforge.ops import graph, kgquery
 
 SF_TINY = "/root/testdata/sf0.001"
 
@@ -75,7 +75,7 @@ def test_sssp_prefers_cheap_long_path(spark):
     seeds = spark.createDataFrame([("n0",)], "node string")
     got = {
         r["node_id"]: r["dist"]
-        for r in kgquery.sssp_distances(adj, seeds).collect()
+        for r in graph.shortest_distances(adj, seeds, kgquery.SSSP_ITERS).collect()
     }
     assert got == {"n0": 0, "n1": 1, "n2": 2}
 
@@ -91,13 +91,13 @@ def test_sssp_iteration_bound(spark):
     one = spark.createDataFrame([("n0",)], "node string")
     got = {
         r["node_id"]: r["dist"]
-        for r in kgquery.sssp_distances(adj, one, iters=4).collect()
+        for r in graph.shortest_distances(adj, one, 4).collect()
     }
     assert got == {"n0": 0, "n1": 1, "n2": 2, "n3": 3, "n4": 4}
     both = spark.createDataFrame([("n0",), ("n5",)], "node string")
     got2 = {
         r["node_id"]: r["dist"]
-        for r in kgquery.sssp_distances(adj, both, iters=4).collect()
+        for r in graph.shortest_distances(adj, both, 4).collect()
     }
     assert got2 == {"n0": 0, "n1": 1, "n2": 2, "n3": 2, "n4": 1, "n5": 0}
 

@@ -84,7 +84,7 @@ def test_application_id_keys_one_module():
 
 # Persist call sites under kgforge/. Shared cuts belong in corpus.cached and
 # loop cuts in localCheckpoint leaves; lower this when a persist goes away.
-PERSIST_SITES = 27
+PERSIST_SITES = 25
 
 
 def test_persist_call_sites_do_not_grow():

@@ -1,14 +1,15 @@
 #!/usr/bin/env python
 """Distributed connected-components at graph scale — evidence that the
-pointer-jumping fixpoint (the path canonical_map_auto takes ABOVE the
-driver-union-find threshold) holds up on large same-as graphs.
+large-star/small-star contraction (kgforge.canon.connected_components_star,
+the path canonical_map_auto takes ABOVE the driver-union-find threshold)
+holds up on large same-as graphs.
 
     python tools/bench_cc.py [--edges 1000000] [--cpus 16]
 
 Generates a deterministic random graph (n nodes ≈ edges/2, plus one
-10k-node chain to force deep propagation), runs kgforge.canon.
-connected_components, and reports wall seconds + iteration behavior +
-a union-find spot check on a sampled subgraph.
+10k-node chain to force deep contraction), runs
+connected_components_star, and reports wall seconds, node and component
+counts as one JSON line.
 """
 from __future__ import annotations
 
@@ -22,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from kgforge.canon import connected_components, connected_components_star  # noqa: E402
+from kgforge.canon import connected_components_star  # noqa: E402
 from kgforge.session import get_spark  # noqa: E402
 
 
@@ -30,7 +31,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--edges", type=int, default=1_000_000)
     ap.add_argument("--cpus", type=int, default=16)
-    ap.add_argument("--algo", choices=["jump", "star"], default="jump")
     args = ap.parse_args()
 
     spark = get_spark(master=f"local[{args.cpus}]", app_name="cc-bench",
@@ -45,7 +45,8 @@ def main() -> int:
         )
         .where(F.col("src") != F.col("dst"))
     )
-    # a 10k chain stresses propagation depth (log2(10k) ≈ 14 jump rounds)
+    # a 10k chain stresses contraction depth (a path of n nodes takes about
+    # log2(n) + 1 star rounds)
     chain = spark.range(10_000).select(
         F.concat(F.lit("c"), F.col("id").cast("string")).alias("src"),
         F.concat(F.lit("c"), (F.col("id") + 1).cast("string")).alias("dst"),
@@ -53,8 +54,7 @@ def main() -> int:
     edges = e.unionByName(chain).withColumn("source", F.lit("bench"))
 
     t0 = time.time()
-    fn = connected_components if args.algo == "jump" else connected_components_star
-    cc = fn(edges)
+    cc = connected_components_star(edges)
     n_comp = cc.select("component").distinct().count()
     wall = time.time() - t0
     print(json.dumps({
@@ -63,7 +63,6 @@ def main() -> int:
         "components": n_comp,
         "wall_s": round(wall, 1),
         "cpus": args.cpus,
-        "algo": args.algo,
     }))
     spark.stop()
     return 0
